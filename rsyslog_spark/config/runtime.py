@@ -67,16 +67,13 @@ def _estimate_input_bytes(path: str | None) -> int | None:
 # FASTER interpreted-projection-only (measured, SCALE.md §1: 2M-line
 # relay 3.4s -> 1.66s). Below this input-size threshold batch runs
 # disable whole-stage fusion (per-expression codegen stays on); at or
-# above it — the 100 TB case — fusion is kept. Override with
-# RSYSLOG_SPARK_CODEGEN_MIN_BYTES (0 forces fusion always).
+# above it — the 100 TB case — fusion is kept.
 _CODEGEN_MIN_BYTES = 4 << 30
 
 
 @contextlib.contextmanager
 def _small_batch_codegen(spark: SparkSession, est_bytes: int | None):
-    thr = int(os.environ.get("RSYSLOG_SPARK_CODEGEN_MIN_BYTES",
-                             _CODEGEN_MIN_BYTES))
-    if est_bytes is None or est_bytes >= thr or thr <= 0:
+    if est_bytes is None or est_bytes >= _CODEGEN_MIN_BYTES:
         yield
         return
     key = "spark.sql.codegen.wholeStage"

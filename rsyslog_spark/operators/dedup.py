@@ -505,10 +505,18 @@ def exact_substring_spans(
 
 
 #: Diagnostics of the most recent connected_components call — skew
-#: instrumentation (guide §2.5) + convergence-read accounting, read
-#: by tests and loggable by operators at scale. Keys: top_dst_share,
-#: total_edge_rows, salted, salt_partitions, rounds, certificate_jobs.
+#: instrumentation (guide §2.5) + round accounting, read by tests and
+#: loggable by operators at scale. Keys: top_dst_share,
+#: total_edge_rows, salted, salt_partitions, rounds.
 _LAST_CC_INFO: dict = {}
+
+#: connected_components fixed tuning: round cap; hub detection (the
+#: hottest dst's share of the symmetrized edge rows, on frames of at
+#: least _CC_MIN_SALT_ROWS rows) and the salted layout's width.
+_CC_MAX_ROUNDS = 25
+_CC_HUB_SHARE = 0.05
+_CC_SALT_PARTITIONS = 16
+_CC_MIN_SALT_ROWS = 100_000
 
 
 def _cc_edge_layout(sym: DataFrame, salt_partitions: int | None):
@@ -540,9 +548,6 @@ def _cc_edge_layout(sym: DataFrame, salt_partitions: int | None):
 
 def connected_components(
     edges: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
-    max_iter: int = 25, jumps_per_round: int = 1,
-    check_every: int = 1, hub_share_threshold: float = 0.05,
-    salt_partitions: int = 16, min_rows_for_salting: int = 100_000,
 ) -> DataFrame:
     """Connected components over an undirected dup-pair edge list →
     ``(id, component)`` with component = min node id in the component.
@@ -557,31 +562,18 @@ def connected_components(
     mutated). Lineage is cut per round with localCheckpoint — the
     analog of persisting intermediate label tables in an iterative
     cluster job — so plan size stays constant no matter the diameter.
-
-    Driver pacing (r12, guide §2.6/§5): ``check_every`` batches the
-    convergence reads — past rounds 0-1 the certificate is read every
-    check_every-th round, skipped rounds chaining lazily into the
-    next read's single scheduler job. **Measured dead end at the
-    default workload — the default stays 1 (read every round).** On
-    the 1M-node chain (20 rounds), check_every=2 cut certificate
-    jobs 20 → 12 but wall went 63-66 s → 169-171 s (2.6×): a skipped
-    round's lazy localCheckpoints are never materialized before the
-    next round's plan fans out over them, and the combined job's
-    concurrent stages (the jump self-join reads each frame twice)
-    each recompute the not-yet-cached partitions — the work
-    amplification dwarfs the saved driver round-trips. Per-round
-    materialization is what makes the lazy-checkpoint sharing cheap;
-    one scheduler job per round is the floor for this shape.
+    One certificate read per round is the floor for this shape:
+    batching the reads is a measured dead end (OPTIMIZATION_r12.md §4).
 
     Skew (r12, guide §2.5): the static hash layout deliberately
     forgoes AQE skew splitting, so one degree histogram runs per call
     (a scan of the already-checkpointed edge frame + a tiny partial-
     agg shuffle, folded into the job that materializes the
-    checkpoint). If the hottest dst holds > ``hub_share_threshold``
-    of a ≥``min_rows_for_salting``-row frame, the layout switches to
+    checkpoint). If the hottest dst holds > ``_CC_HUB_SHARE`` of a
+    ≥``_CC_MIN_SALT_ROWS``-row frame, the layout switches to
     (dst, salt)-partitioning (see _cc_edge_layout) so the hub's rows
-    spread over ``salt_partitions`` tasks every round. Diagnostics of
-    the decision land in ``_LAST_CC_INFO``.
+    spread over ``_CC_SALT_PARTITIONS`` tasks every round.
+    Diagnostics of the decision land in ``_LAST_CC_INFO``.
     """
     sym = edges.select(F.col(id_a).cast("long").alias("src"),
                        F.col(id_b).cast("long").alias("dst"))
@@ -632,9 +624,7 @@ def connected_components(
         """RDD id backing a localCheckpoint'ed frame: the analyzed
         plan is a LogicalRDD whose rdd is marked persisted at BUILD
         time, so per-round blocks can be freed deterministically by
-        id (r11 used persistent-RDD snapshot diffs, which would race
-        with the r12 concurrent plan builder below). Best-effort:
-        a py4j hiccup degrades to not freeing."""
+        id. Best-effort: a py4j hiccup degrades to not freeing."""
         try:
             return df._jdf.queryExecution().analyzed().rdd().id()
         except Exception:
@@ -642,83 +632,17 @@ def connected_components(
 
     def _unpersist_ids(ids: set) -> None:
         try:
-            jmap = (edges.sparkSession.sparkContext._jsc
-                    .getPersistentRDDs())
+            jmap = sc._jsc.getPersistentRDDs()
             for i in ids:
                 if i in jmap:
                     jmap[i].unpersist(False)
         except Exception:
             pass
 
-    # Degree histogram (guide §2.5): the job that materializes the
-    # edge checkpoint (paid in round 0 before r12 anyway) now also
-    # reads max/total dst degree — the skew evidence the static
-    # layout needs. Map-side partial agg keeps the shuffle at one row
-    # per distinct dst.
-    sc.setJobDescription("connected_components: edge degree histogram")
-    deg = (ecp.groupBy("dst").agg(F.count(F.lit(1)).alias("__d"))
-           .agg(F.max("__d"), F.sum("__d")).first())
-    top_deg = deg[0] or 0
-    total_rows = deg[1] or 0
-    if total_rows == 0:
-        # Empty edge frame (no dup pairs at all — common for clean
-        # corpora): converged before round 0. The degree read above
-        # already proved it; skip the layout build and the round
-        # loop entirely (the loop would pay one full round — join +
-        # jump + certificate, ~0.4 s of driver cost — just to
-        # rediscover emptiness).
-        sc.setJobDescription(caller_desc)
-        _LAST_CC_INFO.clear()
-        _LAST_CC_INFO.update(
-            top_dst_share=0.0, total_edge_rows=0, salted=False,
-            salt_partitions=None, rounds=0, certificate_jobs=0)
-        _unpersist_ids({_ckpt_rdd_id(ecp)} - {None})
-        return edges.sparkSession.createDataFrame(
-            [], "id long, component long")
-    top_share = (top_deg / total_rows) if total_rows else 0.0
-    salted = (total_rows >= min_rows_for_salting
-              and top_share > hub_share_threshold)
-    nsalt = salt_partitions if salted else None
-    _LAST_CC_INFO.clear()
-    _LAST_CC_INFO.update(
-        top_dst_share=top_share, total_edge_rows=total_rows,
-        salted=salted, salt_partitions=nsalt)
-    if salted:
-        import logging
-
-        logging.getLogger(__name__).info(
-            "connected_components: hub dst holds %.1f%% of %d edge "
-            "rows — salting the round join over %d partitions",
-            100 * top_share, total_rows, salt_partitions)
-    sym = _cc_edge_layout(ecp, nsalt)
-    # Initial labels read back out of the persisted frame's
-    # self-loops (src==dst ⇔ exactly the distinct node set) — a
-    # columnar-cache filter instead of recomputing the distinct.
-    labels = (sym.filter(F.col("src") == F.col("dst"))
-              .select(F.col("src").alias("id"),
-                      F.col("src").alias("comp"))
-              .localCheckpoint(eager=False))
-    # Convergence certificate: every node's label is monotone
-    # non-increasing (the self-loop contributes its old value to the
-    # min; the jump target is a label of a node whose label <= its
-    # id), so sum(comp) unchanged <=> no label changed — and because
-    # it is monotone PER ROUND, equality across a k-round window
-    # certifies that none of those k rounds changed anything. Reading
-    # the sum is ONE scheduler job over the lazily-checkpointed frame
-    # (the agg action materializes every checkpoint in the window as
-    # a side effect) vs the naive jumped-vs-labels join + count,
-    # which costs a shuffle join and two extra jobs per round.
-    # blocks that must survive the whole run: the edge checkpoint
-    # (the cache's recompute source under memory pressure) and the
-    # initial labels — freed on exit (the returned labels frame is
-    # always a round's jumped checkpoint, never one of these)
-    setup_ids = {_ckpt_rdd_id(ecp), _ckpt_rdd_id(labels)} - {None}
-
     def _build_round(labels_in: DataFrame) -> tuple[DataFrame, set]:
-        """Plan ONE round (neighbor-min join + pointer jumps), both
+        """Plan ONE round (neighbor-min join + pointer jump), both
         halves lineage-cut with lazy localCheckpoints; returns the
-        jumped frame plus the checkpoint RDD ids backing it. Pure
-        driver-side planning — safe to run while a job executes."""
+        jumped frame plus the checkpoint RDD ids backing it."""
         # min over neighbor labels AND the node's own label in one
         # aggregation (self-loops supply the own-label contribution)
         lab = labels_in.select(F.col("id").alias("dst"),
@@ -734,9 +658,9 @@ def connected_components(
             lab = lab.withColumn(
                 "__salt",
                 F.explode(F.sequence(F.lit(0), F.lit(nsalt - 1))))
-            joined = sym.join(lab, ["dst", "__salt"])
+            joined = layout.join(lab, ["dst", "__salt"])
         else:
-            joined = sym.join(lab, "dst")
+            joined = layout.join(lab, "dst")
         stepped = (joined
                    .groupBy("src").agg(F.min("dcomp").alias("comp"))
                    .select(F.col("src").alias("id"), "comp")
@@ -746,130 +670,117 @@ def connected_components(
                    # un-checkpointed form paid that join twice per
                    # round)
                    .localCheckpoint(eager=False))
-        # pointer jumps: comp := comp of comp. More than one jump per
-        # round shortens chains faster but squares the self-join
-        # width — only worth it for high-diameter graphs (callers
-        # opt in).
-        cur = stepped
-        for _ in range(max(1, jumps_per_round)):
-            cur = (cur.alias("s")
-                   .join(cur.select(F.col("id").alias("cid"),
-                                    F.col("comp").alias("ccomp"))
-                         .alias("t"),
-                         F.col("s.comp") == F.col("t.cid"), "left")
-                   .select(F.col("s.id").alias("id"),
-                           F.coalesce(F.col("t.ccomp"),
-                                      F.col("s.comp")).alias("comp")))
-        # lazy checkpoint: the convergence agg is the ONE job per
-        # round — it materializes both checkpoints as a side effect
-        # AND reads the certificate, where an eager checkpoint costs
-        # a second pass (measured ~35% of wall on sf0.1 graphs).
-        jumped = cur.localCheckpoint(eager=False)
+        # pointer jump: comp := comp of comp
+        jumped = (stepped.alias("s")
+                  .join(stepped.select(F.col("id").alias("cid"),
+                                       F.col("comp").alias("ccomp"))
+                        .alias("t"),
+                        F.col("s.comp") == F.col("t.cid"), "left")
+                  .select(F.col("s.id").alias("id"),
+                          F.coalesce(F.col("t.ccomp"),
+                                     F.col("s.comp")).alias("comp"))
+                  # lazy checkpoint: the convergence agg is the ONE
+                  # job per round — it materializes both checkpoints
+                  # as a side effect AND reads the certificate, where
+                  # an eager checkpoint costs a second pass (measured
+                  # ~35% of wall on sf0.1 graphs)
+                  .localCheckpoint(eager=False))
         return jumped, ({_ckpt_rdd_id(stepped), _ckpt_rdd_id(jumped)}
                         - {None})
 
-    # Convergence schedule: rounds 0 and 1 always read the
-    # certificate; past that, every check_every-th round does.
-    # check_every=1 (the default) is every round — see the docstring
-    # for why batching (check_every>1) LOSES despite fewer scheduler
-    # jobs: skipped rounds' unmaterialized checkpoints get recomputed
-    # by the combined job's concurrent stages.
-    prev_sum = None
-    rounds_done = 0
-    n_checks = 0
-    # Per-round checkpoint RDDs are dead one materialized round later
-    # (round k's action materialized everything that read round
-    # k-1's blocks) — freed by id so resident memory stays O(labels),
-    # not O(labels × rounds), on high-diameter graphs.
-    prev_ids: set = set()
-    carry_ids: set = set()   # skipped rounds' blocks (check_every>1)
-    import threading
+    # Blocks this call owns until it returns: the edge checkpoint
+    # (the layout cache's recompute source under memory pressure),
+    # the layout cache itself and the initial labels (setup), plus
+    # the live round's checkpoints. The finally frees all of them on
+    # every exit — error paths included — except the blocks backing
+    # the returned frame (``live`` is cleared on success).
+    setup_ids = {_ckpt_rdd_id(ecp)} - {None}
+    layout = None
+    live: set = set()
+    try:
+        # Degree histogram (guide §2.5): the job that materializes
+        # the edge checkpoint also reads max/total dst degree — the
+        # skew evidence the static layout needs. Map-side partial agg
+        # keeps the shuffle at one row per distinct dst.
+        sc.setJobDescription(
+            "connected_components: edge degree histogram")
+        deg = (ecp.groupBy("dst").agg(F.count(F.lit(1)).alias("__d"))
+               .agg(F.max("__d"), F.sum("__d")).first())
+        top_deg = deg[0] or 0
+        total_rows = deg[1] or 0
+        _LAST_CC_INFO.clear()
+        if total_rows == 0:
+            # Empty edge frame (no dup pairs at all — common for
+            # clean corpora): converged before round 0. The degree
+            # read above already proved it; skip the layout build and
+            # the round loop entirely.
+            _LAST_CC_INFO.update(
+                top_dst_share=0.0, total_edge_rows=0, salted=False,
+                salt_partitions=None, rounds=0)
+            return edges.sparkSession.createDataFrame(
+                [], "id long, component long")
+        top_share = top_deg / total_rows
+        salted = (total_rows >= _CC_MIN_SALT_ROWS
+                  and top_share > _CC_HUB_SHARE)
+        nsalt = _CC_SALT_PARTITIONS if salted else None
+        _LAST_CC_INFO.update(
+            top_dst_share=top_share, total_edge_rows=total_rows,
+            salted=salted, salt_partitions=nsalt)
+        if salted:
+            import logging
 
-    pending, pending_ids = _build_round(labels)
-    for round_no in range(max_iter):
-        # Label each round's job (guide §1.5) so the UI/event log
-        # maps scheduler jobs back to CC rounds; the caller's
-        # description is restored on exit.
-        sc.setJobDescription(f"connected_components: round {round_no}")
-        jumped, jumped_ids = pending, pending_ids
-        do_check = (round_no < 2
-                    or (round_no - 1) % max(1, check_every) == 0
-                    or round_no == max_iter - 1)
-        # Overlap planning with execution (guide §2.6): while this
-        # round's certificate job runs, a worker thread plans the
-        # NEXT round. Planning is pure driver work — a fixed
-        # ~0.3 s/round (measured; it DOMINATES small-graph rounds
-        # whose execution is ~0.1 s and is a per-round driver tax at
-        # any scale) — and it needs only the jumped frame object,
-        # not its data, so it runs concurrently with the job that
-        # materializes that data. Every non-final round the build
-        # rides for free (wall = max(action, build) instead of
-        # action + build); on convergence the abandoned build is NOT
-        # awaited — the worker unpersists its own checkpoint marks
-        # under the lock — so the final round costs nothing either.
-        spec_out: list = []
-        spec_lock = threading.Lock()
-        abandoned = [False]
-        worker = None
-        if do_check and round_no + 1 < max_iter:
-            def _spec(src=jumped):
-                try:
-                    built = _build_round(src)
-                    with spec_lock:
-                        if abandoned[0]:
-                            _unpersist_ids(built[1])
-                        else:
-                            spec_out.append(built)
-                except BaseException as e:  # noqa: BLE001
-                    with spec_lock:
-                        spec_out.append(e)
-            worker = threading.Thread(
-                target=_spec, daemon=True,
-                name="cc-round-planner")
-            worker.start()
-        rounds_done = round_no + 1
-        labels = jumped
-        if not do_check:
-            carry_ids |= jumped_ids
-            pending, pending_ids = _build_round(jumped)
-            continue
-        # sum(comp) as convergence certificate: a scan-only job (no
-        # shuffle join, unlike a jumped-vs-labels diff count).
-        # None = empty graph — converged trivially.
-        cur_sum = jumped.agg(F.sum("comp")).first()[0]
-        n_checks += 1
-        _unpersist_ids((prev_ids | carry_ids) - jumped_ids)
-        prev_ids, carry_ids = jumped_ids, set()
-        if cur_sum is None or cur_sum == prev_sum:
-            # converged: the speculative plans will never execute —
-            # either they are already built (drop their
-            # unmaterialized checkpoint marks here) or the worker
-            # drops them itself when it finishes (abandoned flag);
-            # no join, so the abandoned build never blocks the exit
-            with spec_lock:
-                abandoned[0] = True
-                if spec_out and not isinstance(spec_out[0],
-                                               BaseException):
-                    _unpersist_ids(spec_out[0][1])
-            break
-        prev_sum = cur_sum
-        if round_no + 1 < max_iter:
-            if worker is not None:
-                worker.join()
-                got = spec_out[0]
-                if isinstance(got, BaseException):
-                    raise got
-                pending, pending_ids = got
-            else:
-                pending, pending_ids = _build_round(jumped)
-    sc.setJobDescription(caller_desc)
-    _LAST_CC_INFO.update(rounds=rounds_done, certificate_jobs=n_checks)
-    # The returned frame is a materialized, lineage-truncated
-    # checkpoint: the edge cache, the edge checkpoint under it, and
-    # the initial labels are dead weight from here on.
-    sym.unpersist(False)
-    _unpersist_ids(setup_ids)
-    return labels.select(F.col("id"), F.col("comp").alias("component"))
+            logging.getLogger(__name__).info(
+                "connected_components: hub dst holds %.1f%% of %d "
+                "edge rows — salting the round join over %d "
+                "partitions", 100 * top_share, total_rows, nsalt)
+        layout = _cc_edge_layout(ecp, nsalt)
+        # Initial labels read back out of the persisted frame's
+        # self-loops (src==dst ⇔ exactly the distinct node set) — a
+        # columnar-cache filter instead of recomputing the distinct.
+        labels = (layout.filter(F.col("src") == F.col("dst"))
+                  .select(F.col("src").alias("id"),
+                          F.col("src").alias("comp"))
+                  .localCheckpoint(eager=False))
+        setup_ids |= {_ckpt_rdd_id(labels)} - {None}
+        # Convergence certificate: every node's label is monotone
+        # non-increasing (the self-loop contributes its old value to
+        # the min; the jump target is a label of a node whose label
+        # <= its id), so sum(comp) unchanged <=> no label changed.
+        # Reading the sum is ONE scheduler job over the lazily-
+        # checkpointed frame (the agg action materializes the round's
+        # checkpoints as a side effect) vs the naive jumped-vs-labels
+        # join + count, which costs a shuffle join and two extra jobs
+        # per round.
+        prev_sum = None
+        for round_no in range(_CC_MAX_ROUNDS):
+            # Label each round's job (guide §1.5) so the UI/event log
+            # maps scheduler jobs back to CC rounds; the caller's
+            # description is restored on exit.
+            sc.setJobDescription(
+                f"connected_components: round {round_no}")
+            labels, round_ids = _build_round(labels)
+            live |= round_ids
+            cur_sum = labels.agg(F.sum("comp")).first()[0]
+            _LAST_CC_INFO["rounds"] = round_no + 1
+            # The previous round's checkpoints are dead once this
+            # round's action has run (it materialized everything that
+            # read them) — freed by id so resident memory stays
+            # O(labels), not O(labels × rounds), on high-diameter
+            # graphs.
+            _unpersist_ids(live - round_ids)
+            live = round_ids
+            if cur_sum == prev_sum:
+                break
+            prev_sum = cur_sum
+        result = labels.select(F.col("id"),
+                               F.col("comp").alias("component"))
+        live = set()   # the returned frame owns the last round's blocks
+        return result
+    finally:
+        sc.setJobDescription(caller_desc)
+        if layout is not None:
+            layout.unpersist(False)
+        _unpersist_ids(setup_ids | live)
 
 
 def dedup_by_components(

@@ -7,7 +7,6 @@ chain (ref: runtime/parser.c:615-660).
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import Column, DataFrame
@@ -442,20 +441,21 @@ def _snare_jq(c: Column) -> Column:
     return F.btrim(F.to_json(F.array(c)), F.lit("[]"))
 
 
-# ---- r12: Python description tokenizer (guide §4.2/§4.3) -----------
-# The snare description tokenizer + per-token classifier was the
-# registry's one remaining outlier (~6.3 s exec at sf0.1 = ~1 ms·core
-# per row): every stage is an interpreted higher-order Column fn (no
-# codegen, no common-subexpression elimination), and the pass-1 fold's
-# look-ahead rebuilt the remaining line per word (O(words²) string
-# bytes). The same logic in plain Python with COMPILED regexes and an
-# offset-based look-ahead is O(line) per row and ~30-60 µs/row; it
-# crosses the JVM↔Python boundary as Arrow batches (useArrow=True,
-# ArrowEvalPython — a documented escape hatch, see tools/plan_audit).
-# Java-regex semantics are preserved by translation: Java `.` excludes
-# all five line terminators (Python's only \n), Java `$` also matches
-# before a FINAL terminator, Java `\s` is the ASCII five; Spark
-# trim/ltrim/rtrim strip 0x20 ONLY (verified empirically — not \t/\n).
+# ---- Python description tokenizer (guide §4.2/§4.3) ---------------
+# The snare description tokenizer + per-token classifier is the
+# registry's cost outlier when written as higher-order Column fns:
+# those evaluate interpreted (no codegen, no common-subexpression
+# elimination), and the pass-1 fold's look-ahead rebuilds the
+# remaining line per word (O(words²) string bytes). Plain Python with
+# COMPILED regexes and an offset-based look-ahead is O(line) per row
+# and ~30-60 µs/row; it crosses the JVM↔Python boundary as Arrow
+# batches (useArrow=True, ArrowEvalPython — a documented escape
+# hatch, see tools/plan_audit).
+# The regexes keep Java-regex semantics (the goldens were pinned under
+# them) by translation: Java `.` excludes all five line terminators
+# (Python's only \n), Java `$` also matches before a FINAL terminator,
+# Java `\s` is the ASCII five; Spark trim/ltrim/rtrim strip 0x20 ONLY
+# (verified empirically — not \t/\n).
 _J_DOT = r"[^\n\r  ]"
 _J_EOL = r"(?=(?:\r\n|[\n\r  ])?\Z)"
 # NB: _J_DOT/_J_EOL embed the three non-ASCII Java line terminators
@@ -480,11 +480,43 @@ _SN_NAME_RX = re.compile(r":" + _J_EOL)
 
 
 def _snare_tokenize_py(desc: str, std_secs: tuple) -> list:
-    """Pure-Python twin of the mmsnareparse tokenize+classify Column
-    chain (c_tokenize / line_tokens / _base_info / _sec_info /
-    _enrich below) — same outputs, compiled-regex speed. Pinned
-    equivalent by test_snare_py_tokenizer_matches_column_path and the
-    r11 adversarial battery run under both paths."""
+    """mmsnareparse description tokenize+classify → one
+    ``_SNARE_TOKS_SCHEMA`` struct per token.
+
+    C-faithful tokenization (verified against a compiled extract of
+    the reference's tokenize_on_multispace):
+      1. runs of 3+ spaces separate logical LINES
+         (normalize_description mmsnareparse.c:4208-4246);
+      2. each line splits at its FIRST colon into header + rest
+         (parse_line :4323); the header re-attaches as a 'Key:'
+         token so the section walk sees it (prose prefixes before an
+         embedded section header ride along — the suffix match
+         handles '...logged on. Subject:');
+      3. the rest tokenizes like tokenize_on_multispace (:687): a
+         2-space run delimits unless it directly follows the colon
+         (the 'Key:  value' form), ANY space delimits when the text
+         ahead looks like a label (looks_like_label_start :671 —
+         uppercase start, [A-Za-z0-9 /()#-]* up to a colon), and NO
+         delimiter applies until the current token carries a
+         complete 'key: value' (tokenSawColon/tokenHasValue);
+      4. a pass-2 overlay (parse_key_value_sequence's single-word-key
+         scan, mmsnareparse.c:3960-4050) re-pairs single-space runs
+         where a value legitimately contains ' WORD ' before the next
+         label ('User: CORP\\NETWORK | SERVICE Hashes: ...');
+         json_object_object_add REPLACE semantics make it win.
+         Overlay tokens ride flagged (ov) after the line's pass-1
+         tokens: keep-LAST dedup reproduces the overwrite, and the
+         ParsingStats counter excludes them (the reference's own
+         test expectations — mmsnareparse-enhanced-validation.sh
+         total_fields=25 — count the pass-1 dispatches only).
+
+    Each token then gets its section canonical (exact or trailing-*
+    wildcard header match against ``std_secs``,
+    section_pattern_matches mmsnareparse.c:2825), inline / key-only
+    flags, cleaned key (normalize_label :1057: parenthesised runs
+    drop, non-alphanumerics collapse) and inline value. Pinned by the
+    rsyslog reference-replay goldens and
+    test_mmsnareparse_tokenizer_hostile_goldens."""
     out = []
     for line in _SN_LINES_RX.split(desc or ""):
         pos = line.find(":") + 1
@@ -574,8 +606,7 @@ def mmsnareparse(df: DataFrame, msg_col: str = "msg", *,
                  ignore_trailing_regex: str | None = None,
                  search_window: int = 256,
                  definition=None,
-                 validation_mode: str = "permissive",
-                 tokenizer: str = "arrow") -> DataFrame:
+                 validation_mode: str = "permissive") -> DataFrame:
     """Structured Snare/NXLog Windows-event parser (ref: plugins/
     mmsnareparse/mmsnareparse.c): tab header → ``$!win!Event`` (with
     the builtin EventID→Category/Subtype/Outcome table), description
@@ -605,10 +636,12 @@ def mmsnareparse(df: DataFrame, msg_col: str = "msg", *,
     message rejection is not modeled — errors always record and
     values fall back, the reference's permissive default).
 
-    Scale: pure column ops; the token walk is an O(tokens²)
-    higher-order-function scan per row bounded by the event text, and
-    the routed-entry array is MATERIALIZED once so the ~300-literal
-    routing maps appear a single time in the plan.
+    Scale: the description tokenizer is an O(line) Arrow Python UDF
+    (_snare_tokenize_py); everything else is column ops — the
+    section walk is an O(tokens²) higher-order-function scan per row
+    bounded by the event text, and the routed-entry array is
+    MATERIALIZED once so the ~300-literal routing maps appear a
+    single time in the plan.
     """
     from rsyslog_spark.expr import rs_str
     from rsyslog_spark.parsers.snare_tables import (
@@ -778,201 +811,17 @@ def mmsnareparse(df: DataFrame, msg_col: str = "msg", *,
     desc = F.when(ok, joined) \
         .when(m.contains("MSWinEventLog"), m).otherwise(F.lit(""))
 
-    # ---- tokenize + section walk (all higher-order column fns) ----
-    # C-faithful tokenization (verified against a compiled extract of
-    # the reference's tokenize_on_multispace):
-    #   1. runs of 3+ spaces separate logical LINES
-    #      (normalize_description mmsnareparse.c:4208-4246);
-    #   2. each line splits at its FIRST colon into header + rest
-    #      (parse_line :4323); the header re-attaches as a 'Key:'
-    #      token so the section walk below sees it (prose prefixes
-    #      before an embedded section header ride along — the walk's
-    #      suffix match handles '...logged on. Subject:');
-    #   3. the rest tokenizes like tokenize_on_multispace (:687):
-    #      a 2-space run delimits unless it directly follows the
-    #      colon (the 'Key:  value' form), ANY space delimits when
-    #      the text ahead looks like a label (looks_like_label_start
-    #      :671 — uppercase start, [A-Za-z0-9 /()#-]* up to a colon),
-    #      and NO delimiter applies until the current token carries
-    #      a complete 'key: value' (tokenSawColon/tokenHasValue).
-    # This replaces the previous 2+-space-split + Sysmon sub-split:
-    # single-space Windows 4624-style payloads now tokenize into the
-    # reference's multi-word keys ('Security ID: SYSTEM') instead of
-    # single-word fragments.
-    _label_rx = "^[A-Z][A-Za-z0-9 /()#-]*:"
-    _big = F.lit(1 << 20)
-
-    def c_tokenize(rest):
-        words = F.split(rest, " ")
-        ws = F.transform(words, lambda w, i: F.struct(
-            w.alias("w"),
-            F.array_join(F.slice(words, i + 1, _big), " ")
-            .rlike(_label_rx).alias("lab")))
-        init = F.struct(
-            F.array().cast("array<string>").alias("toks"),
-            F.lit("").alias("cur"), F.lit(0).alias("sep"))
-
-        def step(acc, x):
-            w, lab = x["w"], x["lab"]
-            cur, sep = acc["cur"], acc["sep"] + 1
-            # tokenHasValue: some non-space/non-colon char after a ':'
-            complete = cur.rlike(":.*[^ :]")
-            delim = (((sep >= 2) & ~cur.endswith(":")) | lab) \
-                & complete
-            grown = F.when(cur == "", w).otherwise(
-                F.concat(cur, F.repeat(F.lit(" "), sep), w))
-            return F.when(w == "", F.struct(
-                acc["toks"].alias("toks"), cur.alias("cur"),
-                sep.alias("sep"))).otherwise(F.struct(
-                    F.when(delim & (cur != ""),
-                           F.array_append(acc["toks"], cur))
-                    .otherwise(acc["toks"]).alias("toks"),
-                    F.when(delim, w).otherwise(grown).alias("cur"),
-                    F.lit(0).alias("sep")))
-
-        return F.aggregate(
-            ws, init, step,
-            lambda acc: F.when(acc["cur"] != "",
-                               F.array_append(acc["toks"],
-                                              acc["cur"]))
-            .otherwise(acc["toks"]))
-
-    def line_tokens(line):
-        pos = F.instr(line, ":")
-        hdr = F.trim(F.substr(line, F.lit(1), pos))
-        rest = F.ltrim(F.substr(line, pos + 1, _big))
-        # pass-2 overlay (parse_key_value_sequence's single-word-key
-        # scan, mmsnareparse.c:3960-4050): single-space runs where a
-        # value legitimately contains ' WORD ' before the next label
-        # mis-split in pass 1 ('User: CORP\\NETWORK | SERVICE
-        # Hashes: ...'); the second scan re-pairs on single-word keys
-        # and json_object_object_add REPLACE semantics make it win.
-        # Overlay tokens ride flagged (\x01) after the line's pass-1
-        # tokens: keep-LAST dedup reproduces the overwrite, and the
-        # ParsingStats counter excludes them (the reference's own
-        # test expectations — mmsnareparse-enhanced-validation.sh
-        # total_fields=25 — count the pass-1 dispatches only).
-        overlay = F.transform(
-            F.filter(
-                F.split(rest, r"\s+(?=[A-Z][A-Za-z0-9]*:)"),
-                lambda p: p.rlike(r"^[A-Z][A-Za-z0-9]*: +\S")),
-            lambda p: F.concat(F.lit("\x01"), p))
-        return F.when(
-            pos > 0,
-            F.concat(F.array(hdr), c_tokenize(rest), overlay)) \
-            .otherwise(F.array(F.trim(line)))
-
-    toks = F.filter(
-        F.flatten(F.transform(F.split(desc, " {3,}"), line_tokens)),
-        lambda t: t != "")
-
-    # section descriptors: exact or trailing-* wildcard header match
-    # (section_pattern_matches, mmsnareparse.c:2825); only 'std'
-    # behavior opens a walk section — inline/semi/list headers stay
-    # ordinary Key: tokens handled by their special paths below.
-    # PERF: all per-token classification (section canonical, inline /
-    # key-only flags, cleaned key, inline value) happens ONCE in the
-    # materialized __snare_toks struct array — the O(tokens²)
-    # section/consume walk below then touches only cheap struct
-    # fields. (The first cut re-ran the descriptor regex chain inside
-    # the n² loop: ~50x slower at sf0.1.)
-    std_secs = [(p, c) for p, c, b in sections if b == "std"]
-
-    # PERF (r11, measured): do NOT rewrite these per-token regexes
-    # into instr/substr chains — HOF lambdas evaluate interpreted,
-    # where per-NODE overhead dominates, and an instr/substr/ltrim
-    # expansion of name/inl/ko0/iv A/B'd ~60% SLOWER than the single
-    # compiled-regex nodes. A linear-fold replacement for entry_of's
-    # O(tokens²) section scan measured a wash (tokens/row ≈ 18).
-    def _base_info(t0):
-        ov = t0.startswith("\x01")
-        t = F.when(ov, F.substr(t0, F.lit(2), _big)).otherwise(t0)
-        return F.struct(
-            t.alias("t"),
-            ov.alias("ov"),
-            F.regexp_replace(t, ":$", "").alias("name"),
-            (t.endswith(":") & ~ov).alias("ends"),
-            # a key-value token needs whitespace after the colon —
-            # 'C:\\Windows\\...' path VALUES must not read as key 'C'
-            # (the reference never key-splits inside a stored value)
-            t.rlike(r"^[A-Za-z][^:]*: +\S").alias("inl"),
-            (t.rlike(r"^[A-Za-z][^:]*:$") & ~ov).alias("ko0"),
-        )
-
-    # PERF (r11, measured): the 17-branch section chain is computed
-    # in ITS OWN transform pass, ONCE per token, gated on `ends` —
-    # interpreted HOF eval has no common-subexpression elimination,
-    # so the previous single-pass form (sec referenced by the sec/
-    # inl/ko output fields) walked the chain up to 3x per token, and
-    # every NON-header token (ends=false, the vast majority) still
-    # paid all 17 And(ends, cond) branch evaluations. Now a
-    # non-header token costs one field read + one `when`; a header
-    # token walks the name comparisons exactly once. Same match
-    # priority (std_secs order) and identical null semantics.
-    def _sec_info(e):
-        sec = F.lit(None).cast("string")
-        for pat, canon in reversed(std_secs):
-            if pat.endswith("*"):
-                cond = F.lower(e["name"]).startswith(
-                    pat[:-1].lower())
-            else:
-                # exact header OR embedded at the end of a prose
-                # prefix ('An account was ... logged on. Subject:' —
-                # find_embedded_section_descriptor, parse_line path)
-                cond = (e["name"] == pat) \
-                    | e["name"].endswith(" " + pat)
-            sec = F.when(cond, F.lit(canon)).otherwise(sec)
-        return F.struct(
-            e["t"].alias("t"), e["ov"].alias("ov"),
-            e["name"].alias("name"),
-            F.when(e["ends"], sec).alias("sec"),
-            e["inl"].alias("inl"), e["ko0"].alias("ko0"),
-        )
-
-    def _enrich(e):
-        sec = e["sec"]
-        # keys canonicalize like normalize_label (mmsnareparse.c:
-        # 1057): parenthesised runs drop, non-alphanumerics collapse
-        # ("Pre-Authentication Type" → PreAuthenticationType)
-        key0 = F.when(e["inl"],
-                      F.regexp_extract(e["t"], r"^([^:]*):", 1)) \
-            .when(e["ko0"], F.rtrim(e["name"]))
-        return F.struct(
-            e["t"].alias("t"),
-            e["ov"].alias("ov"),
-            sec.alias("sec"),
-            (e["inl"] & sec.isNull()).alias("inl"),
-            (e["ko0"] & sec.isNull()).alias("ko"),
-            F.regexp_replace(
-                F.regexp_replace(key0, r"\s*\([^)]*\)", ""),
-                r"[^A-Za-z0-9]+", "").alias("k"),
-            # gated on the raw inl flag (a superset of the emitted
-            # one): every consumer reads iv only when inl is set, and
-            # non-inline tokens then skip the extract entirely
-            F.when(e["inl"],
-                   F.regexp_extract(e["t"], r"^[^:]*:\s*(.*)$", 1))
-            .alias("iv"),
-        )
-
-    if tokenizer == "arrow":
-        # r12 (guide §4.2/§4.3): the tokenize+classify chain above
-        # evaluates interpreted per token (HOF — no codegen, no CSE)
-        # and pass 1's look-ahead is O(words²); the compiled-regex
-        # Python twin is O(line) and crosses the boundary as Arrow
-        # batches. ONLY the desc string ships to Python (guide §4.1:
-        # pass only the columns the function needs). Equivalence is
-        # pinned by tests (same-output battery + full-frame exceptAll
-        # on the oracle corpus).
-        std_secs_t = tuple(std_secs)
-        tok_udf = F.udf(
-            lambda d: _snare_tokenize_py(d, std_secs_t),
-            _SNARE_TOKS_SCHEMA, useArrow=True)
-        out = out.withColumn("__snare_toks", tok_udf(desc))
-    else:
-        out = out.withColumn(
-            "__snare_toks",
-            F.transform(F.transform(F.transform(toks, _base_info),
-                                    _sec_info), _enrich))
+    # ---- tokenize + classify (_snare_tokenize_py) ----
+    # Every token is classified ONCE into the materialized
+    # __snare_toks struct array — the O(tokens²) section/consume walk
+    # below then touches only cheap struct fields. Only 'std'
+    # sections open a walk section; inline/semi/list headers stay
+    # ordinary Key: tokens handled by their special paths below. ONLY
+    # the desc string crosses to Python (guide §4.1).
+    std_secs = tuple((p, c) for p, c, b in sections if b == "std")
+    tok_udf = F.udf(lambda d: _snare_tokenize_py(d, std_secs),
+                    _SNARE_TOKS_SCHEMA, useArrow=True)
+    out = out.withColumn("__snare_toks", tok_udf(desc))
     info = F.col("__snare_toks")
 
     # per-token (section, key, value) — null when the token is a
@@ -1274,8 +1123,6 @@ def mmsnareparse(df: DataFrame, msg_col: str = "msg", *,
         F.size(laps) > 0,
         F.to_json(F.map_from_entries(laps_pairs))))
     out = out.withColumns(pending)
-    if os.environ.get("RSYSLOG_SPARK_SNARE_DEBUG"):
-        return out  # keep intermediate walk columns for profiling
     return out.drop("__snare_m", "__snare_tabs", "__snare_eid",
                     "__snare_toks", "__snare_entries",
                     "__snare_routed", "__snare_ri", "__snare_keep",

@@ -2338,49 +2338,86 @@ def test_mmsnareparse_route_materialization_battery(spark):
         '{"PrivilegeList":"SeTcbPrivilege SeBackupPrivilege"}'
 
 
-def test_mmsnareparse_tokenizer_paths_equivalent(spark):
-    """r12: the description tokenizer+classifier runs as a compiled-
-    regex Python/Arrow UDF by default (the interpreted-HOF chain was
-    the registry's cost outlier — full-parse 5.6 -> 3.1 s at sf0.1);
-    tokenizer="hof" keeps the pure-Column path. Both paths must
-    produce IDENTICAL full output frames — pinned here on the route
-    battery's cases plus tokenizer-hostile shapes (line terminators
-    inside values, single-space Sysmon pairs, colon paths, unicode,
-    empty/marker-free rows, overlay re-pairing). The r12 A/B also
-    verified exceptAll 0/0 on the full 100k oracle corpus."""
-    from pyspark.sql import functions as F
-
+def test_mmsnareparse_tokenizer_hostile_goldens(spark):
+    """Tokenizer-hostile description shapes (line terminators inside
+    values, single-space Sysmon pairs, colon paths, unicode, empty /
+    marker-free rows, overlay re-pairing, prose before an embedded
+    section header) → the full output row: every non-null column,
+    and nothing else. Expected rows were captured when the Arrow
+    tokenizer and the former higher-order-Column tokenizer still
+    produced identical frames on these cases."""
     from rsyslog_spark.parsers.vendors import mmsnareparse
 
     H = ("MSWinEventLog\t1\tSecurity\t42\tTue Feb 18 06:42:17 2025\t"
          "4624\tMicrosoft-Windows-Security-Auditing\tN/A\tN/A\t"
          "Success Audit\tHOST-01\tLogon\t\t")
+    ev = ('{"EventID":"4624","TimeCreated":{},"Channel":"Security",'
+          '"SnareCounter":"42","EventLogType":"Success Audit",'
+          '"EventType":"Success Audit",'
+          '"Provider":"Microsoft-Windows-Security-Auditing",'
+          '"Computer":"HOST-01","Category":"Logon",'
+          '"CategoryText":"Logon","Subtype":"Success",'
+          '"Outcome":"success"}')
+
+    def parsed(n_fields, **cols):
+        n = str(n_fields)
+        return {"cee_win_event": ev,
+                "cee_win_validation": '{"Errors":[]}',
+                "cee_win_stats": (
+                    '{"ParsingStats":{"total_fields":' + n
+                    + ',"successful_parses":' + n
+                    + ',"failed_parses":0}}'),
+                **{"cee_win_" + k: v for k, v in cols.items()}}
+
     cases = [
-        H + "Subject:   Account Name:  first   Account Name:  "
-            "second   \t17",
-        H + "Process Information:   New Process Name:  "
-            "C:\\Windows\\System32\\svchost.exe   \t3",
-        H + "User: CORP\\NETWORK | SERVICE Hashes: MD5=AB12   \t9",
-        H + "An account was successfully logged on. Subject:   "
-            "Security ID:  S-1-5-18   \t2",
-        H + "Subject:   Account Name:  line\nbreak   Domain:  "
-            "tab\there   \t5",
-        H + "Subject:   Account Name:  trailing\r   \t6",
-        H + "Subject:   账户 Name:  unicode véälue   \t7",
-        H + "NoColonAtAll bare words only   \t8",
-        H + "Key:value-no-space   K2:  v2   \t4",
-        "no marker at all",
-        "",
-        H + "   \t0",
-        H + "Logon Information:   Logon Type:  2   Elevated "
-            "Token:  No   Virtual Account:  No   \t11",
+        (H + "Subject:   Account Name:  first   Account Name:  "
+             "second   \t17",
+         parsed(2, subject='{"AccountName":"second"}')),
+        (H + "Process Information:   New Process Name:  "
+             "C:\\Windows\\System32\\svchost.exe   \t3",
+         parsed(1, process='{"NewProcessName":'
+                           '"C:\\\\Windows\\\\System32\\\\svchost.exe"}')),
+        (H + "User: CORP\\NETWORK | SERVICE Hashes: MD5=AB12   \t9",
+         parsed(0, eventdata='{"Hashes":"MD5=AB12"}')),
+        (H + "An account was successfully logged on. Subject:   "
+             "Security ID:  S-1-5-18   \t2",
+         parsed(1, subject='{"SecurityID":"S-1-5-18"}')),
+        (H + "Subject:   Account Name:  line\nbreak   Domain:  "
+             "tab\there   \t5",
+         parsed(2, subject='{"AccountName":"line\\nbreak",'
+                           '"Domain":"tab here"}')),
+        (H + "Subject:   Account Name:  trailing\r   \t6",
+         parsed(1, subject='{"AccountName":"trailing\\r"}')),
+        (H + "Subject:   账户 Name:  unicode véälue   \t7",
+         parsed(0)),
+        (H + "NoColonAtAll bare words only   \t8",
+         parsed(0, summary="NoColonAtAll bare words only")),
+        (H + "Key:value-no-space   K2:  v2   \t4",
+         parsed(2, eventdata='{"Key":"value-no-space","K2":"v2"}')),
+        ("no marker at all", {}),
+        ("", {}),
+        (H + "   \t0", parsed(0)),
+        (H + "Logon Information:   Logon Type:  2   Elevated "
+             "Token:  No   Virtual Account:  No   \t11",
+         parsed(3, logoninformation=(
+             '{"LogonType":2,"LogonTypeName":"Interactive",'
+             '"ElevatedToken":"No","VirtualAccount":"No"}'))),
     ]
     df = spark.createDataFrame(
-        [(i, m) for i, m in enumerate(cases)], "rid long, msg string")
-    fa = mmsnareparse(df, tokenizer="hof")
-    fb = mmsnareparse(df, tokenizer="arrow")
-    assert fa.columns == fb.columns
-    ja = fa.select(F.to_json(F.struct(*fa.columns)).alias("j"))
-    jb = fb.select(F.to_json(F.struct(*fb.columns)).alias("j"))
-    assert ja.exceptAll(jb).count() == 0
-    assert jb.exceptAll(ja).count() == 0
+        [(i, m) for i, (m, _) in enumerate(cases)],
+        "rid long, msg string")
+    out = mmsnareparse(df)
+    assert out.columns == ["rid", "msg", "cee_win_event"] + [
+        "cee_win_" + c for c in (
+            "accountinformation", "additionalinformation",
+            "application", "authentication", "certificate",
+            "detailedauthentication", "eventdata", "failure",
+            "filter", "kerberos", "logon", "logoninformation",
+            "network", "newlogon", "privileges", "process",
+            "service", "share", "subject", "tlsinspection",
+            "targetaccount", "wdac", "wufb", "validation", "stats",
+            "summary", "laps")]
+    got = {r.rid: {k: v for k, v in r.asDict().items()
+                   if v is not None and k not in ("rid", "msg")}
+           for r in out.collect()}
+    assert got == {i: want for i, (_, want) in enumerate(cases)}

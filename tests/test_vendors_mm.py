@@ -3,6 +3,8 @@ mmexternal subprocess bridge."""
 
 import sys
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from rsyslog_spark.operators.lookup import geoip_range_join
@@ -658,6 +660,14 @@ class TestMinhashDedup:
         assert cands == {(1, 2)}
 
 
+def _persisted_since(sc, floor: int) -> list[int]:
+    """Ids of the persisted RDDs created at or after RDD id ``floor``
+    (take it from ``sc._jsc.sc().newRddId()``): blocks left behind by
+    the code under test, blind to older frames that the JVM garbage
+    collector may free at any moment."""
+    return sorted(i for i in sc._jsc.getPersistentRDDs() if i >= floor)
+
+
 class TestComponentsAndSampling:
     def test_connected_components_chain_and_islands(self, spark):
         """A 4-node chain (diameter 3) plus a 2-clique plus implied
@@ -702,40 +712,73 @@ class TestComponentsAndSampling:
         finally:
             sc.setJobDescription(None)
 
-    def test_connected_components_certificate_batching(self, spark):
-        """check_every batches the convergence reads (fewer scheduler
-        jobs than rounds) with labels identical to the default
-        every-round schedule. The DEFAULT stays 1: batching was
-        measured 2.6x SLOWER on a 1M-node chain (skipped rounds'
-        unmaterialized checkpoints get recomputed by the combined
-        job's concurrent stages) — this pins that the knob still
-        works and that the default reads every round."""
-        from rsyslog_spark.operators.dedup import (_LAST_CC_INFO,
-                                                   connected_components)
+    def test_connected_components_error_path_cleanup(self, spark,
+                                                     monkeypatch):
+        """A failure inside the round loop (here: the second round's
+        certificate read) restores the caller's job description and
+        frees every block the call persisted — edge checkpoint, edge
+        layout cache, initial labels and the live rounds' checkpoints."""
+        from rsyslog_spark.operators.dedup import connected_components
 
+        sc = spark.sparkContext
         edges = spark.createDataFrame(
             [(i, i + 1) for i in range(63)], "id_a long, id_b long")
-        got = {r.id: r.component
-               for r in connected_components(edges).collect()}
-        assert got == {i: 0 for i in range(64)}
-        every = dict(_LAST_CC_INFO)
-        assert every["certificate_jobs"] == every["rounds"], every
+        real_first = type(edges).first
+        calls = []
 
-        got2 = {r.id: r.component
-                for r in connected_components(edges,
-                                              check_every=2).collect()}
-        assert got2 == got
-        batched = dict(_LAST_CC_INFO)
-        assert batched["certificate_jobs"] < batched["rounds"], batched
-        assert batched["certificate_jobs"] < every["certificate_jobs"]
+        def failing_first(self):
+            # call 1 is the degree histogram, calls 2.. the per-round
+            # certificate reads
+            calls.append(1)
+            if len(calls) == 3:
+                raise RuntimeError("injected certificate failure")
+            return real_first(self)
+
+        sc.setJobDescription("caller-label")
+        try:
+            floor = sc._jsc.sc().newRddId()
+            monkeypatch.setattr(type(edges), "first", failing_first)
+            with pytest.raises(RuntimeError, match="injected"):
+                connected_components(edges)
+            monkeypatch.undo()
+            assert len(calls) == 3
+            assert (sc.getLocalProperty("spark.job.description")
+                    == "caller-label")
+            assert _persisted_since(sc, floor) == []
+        finally:
+            sc.setJobDescription(None)
+
+    def test_connected_components_repeated_calls_flat(self, spark):
+        """A long-lived session returns to baseline: every call leaves
+        only the returned frame's two round checkpoints persisted and
+        frees everything else itself, so with each result released
+        before the next call the count stays flat across calls."""
+        from rsyslog_spark.operators.dedup import connected_components
+
+        sc = spark.sparkContext
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(63)], "id_a long, id_b long")
+        floor = sc._jsc.sc().newRddId()
+        counts = []
+        for _ in range(3):
+            got = {r.id: r.component
+                   for r in connected_components(edges).collect()}
+            assert got == {i: 0 for i in range(64)}
+            left = _persisted_since(sc, floor)
+            counts.append(len(left))
+            # the caller releases the result before the next call
+            jmap = sc._jsc.getPersistentRDDs()
+            for i in left:
+                jmap[i].unpersist(False)
+        assert counts == [2, 2, 2]
 
     def test_connected_components_hub_salting(self, spark):
         """r12 skew handling (guide §2.5): a star graph's hub dst
         holds ~1/3 of the symmetrized edge rows — the degree
         histogram detects it and the round join switches to the
-        (dst, salt) layout. Labels must be identical to the unsalted
-        run, and the salted layout must spread the hub's rows instead
-        of serializing them into one partition."""
+        (dst, salt) layout. Every node must land in the hub's
+        component, and the salted layout must spread the hub's rows
+        instead of serializing them into one partition."""
         from pyspark.sql import functions as F
 
         from rsyslog_spark.operators.dedup import (_LAST_CC_INFO,
@@ -752,13 +795,6 @@ class TestComponentsAndSampling:
         info = dict(_LAST_CC_INFO)
         assert info["salted"] is True, info
         assert info["top_dst_share"] > 0.05, info
-
-        # identical labels with salting disabled (hub threshold 1.0
-        # can never trip)
-        comp_plain = connected_components(edges, hub_share_threshold=1.0)
-        assert dict(_LAST_CC_INFO)["salted"] is False
-        assert comp.exceptAll(comp_plain).count() == 0
-        assert comp_plain.exceptAll(comp).count() == 0
 
         # the salted layout spreads the hub across partitions: no
         # partition holds > 2x the median row count (the unsalted

@@ -8,12 +8,12 @@ must be a documented escape hatch).
 Documented ArrowEvalPython escape hatches:
 - mmaitag_classify / mmjsontransform_unflatten / scalar_battery_misc
   (pre-r12, see each operator)
-- mmsnareparse (r12): the description tokenizer+classifier runs as a
-  compiled-regex Python UDF over Arrow batches — the interpreted-HOF
-  Column chain it replaces measured 1.8x slower (guide §4.2/§4.3;
-  equivalence pinned by test_mmsnareparse_tokenizer_paths_equivalent
-  and a 100k-corpus exceptAll); only the desc string crosses the
-  boundary.
+- mmsnareparse: the description tokenizer+classifier runs as a
+  compiled-regex Python UDF over Arrow batches (guide §4.2/§4.3);
+  only the desc string crosses the boundary. The interpreted-HOF
+  Column chain it replaced lost the perfbench `snare_parse` A/B on a
+  4-core host: pass_cpu_s 6.37/6.86/7.36 s for the UDF vs
+  7.15/8.40/7.91 s for the chain, 3 interleaved pairs, all correct.
 
 Known-intentional BNLJ sites (all broadcast-SMALL-side, never
 data×data):

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -28,6 +29,15 @@ NODES = ("Exchange", "BroadcastHashJoin", "SortMergeJoin",
          "CartesianProduct", "BatchEvalPython", "ArrowEvalPython",
          "MapInPandas", "MapInArrow", "Sort", "Window",
          "HashAggregate", "ObjectHashAggregate", "SortAggregate")
+
+
+def count_plan_nodes(plan: str) -> dict[str, int]:
+    """Occurrences of each NODES name in a physical-plan string, as
+    whole words: HashAggregate does not count ObjectHashAggregate,
+    Exchange does not count BroadcastExchange, Sort does not count
+    SortMergeJoin. Names that do not occur are left out."""
+    counts = {n: len(re.findall(rf"\b{n}\b", plan)) for n in NODES}
+    return {n: c for n, c in counts.items() if c}
 
 
 def main() -> int:
@@ -71,16 +81,8 @@ def main() -> int:
             best_c = min(best_c, t1 - t0)
             best_e = min(best_e, t2 - t1)
             if rep == 0:
-                plan = df._jdf.queryExecution().executedPlan().toString()
-                plan_counts = {n: plan.count(n) for n in NODES
-                               if plan.count(n)}
-                # Sort counts SortMergeJoin/SortAggregate substrings too
-                if "Sort" in plan_counts:
-                    plan_counts["Sort"] -= (
-                        plan_counts.get("SortMergeJoin", 0)
-                        + plan_counts.get("SortAggregate", 0))
-                    if not plan_counts["Sort"]:
-                        del plan_counts["Sort"]
+                plan_counts = count_plan_nodes(
+                    df._jdf.queryExecution().executedPlan().toString())
         sc.setJobDescription(None)
         entry: dict = {"err": err} if err else {
             "construct_s": round(best_c, 3),
